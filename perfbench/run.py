@@ -31,6 +31,7 @@ import json
 import os
 import platform
 import shutil
+import signal
 import statistics
 import subprocess
 import sys
@@ -119,6 +120,61 @@ def process_tree(root_pid: int) -> list:
         out.append(pid)
         todo += children.get(pid, [])
     return out
+
+
+def _alive(pid: int) -> bool:
+    """True while ``pid`` exists and is not a zombie."""
+    try:
+        with open(f"/proc/{pid}/stat") as fh:
+            return fh.read().rsplit(")", 1)[1].split()[0] != "Z"
+    except OSError:
+        return False
+
+
+def stop_spark() -> None:
+    """Stop the Spark session, then end its JVM and the JVM's Python workers
+    and wait for every one of them, so no process outlives the run.
+
+    PySpark leaves the JVM to notice on its own, after this process exits,
+    that its stdin has closed; it and its workers would still be running
+    when the run returns."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    proc = getattr(gateway, "proc", None)
+    if proc is None:
+        return
+    workers = set(process_tree(proc.pid)[1:])
+    if SparkContext._active_spark_context is not None:
+        try:
+            SparkContext._active_spark_context.stop()
+        except Exception:  # still end the JVM below
+            traceback.print_exc()
+    workers.update(process_tree(proc.pid)[1:])
+    # the gateway JVM exits when its stdin reaches EOF
+    try:
+        proc.stdin.close()
+    except (OSError, AttributeError):
+        pass
+    try:
+        proc.wait(timeout=30)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
+    # the workers lost their parent with the JVM: give them 10 s to exit on
+    # their own, then end them
+    for sig in (None, signal.SIGTERM, signal.SIGKILL):
+        for pid in workers:
+            if sig is not None and _alive(pid):
+                try:
+                    os.kill(pid, sig)
+                except OSError:
+                    pass
+        deadline = time.monotonic() + 10
+        while time.monotonic() < deadline and any(_alive(p) for p in workers):
+            time.sleep(0.05)
+        if not any(_alive(p) for p in workers):
+            break
 
 
 def peak_rss_mb(spark) -> list:
@@ -391,6 +447,8 @@ def main(argv=None) -> int:
               f"choose from {sorted(workloads.WORKLOADS)}", file=sys.stderr)
         return 2
 
+    # a terminated run still ends the JVM it started (the finally below)
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     args.work = os.path.join(ROOT, ".perfbench_work", f"{args.workload}-{os.getpid()}")
     shutil.rmtree(args.work, ignore_errors=True)
     os.makedirs(args.work)
@@ -402,6 +460,7 @@ def main(argv=None) -> int:
             f"{SHUFFLE_PARTITIONS}, driver memory {os.environ['SPARK_GRAFT_DRIVER_MEM']}")
         metrics, ops = run(args)
     finally:
+        stop_spark()
         shutil.rmtree(args.work, ignore_errors=True)
     log(f"operations: {ops.attempted} attempted, {ops.failed} failed"
         + (f" ({ops.messages[:3]})" if ops.failed else ""))

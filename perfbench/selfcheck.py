@@ -9,7 +9,8 @@ The gate checks feed each workload's ``check`` a correct output and a
 corrupted one and require the corruption to be reported.  ``--runs`` runs
 ``run.py --size tiny`` once per workload and mode, one process at a time,
 and requires a correct result that carries every metric BENCHMARK.json
-names (plus the bypass zeros the traced table must show).
+names (plus the bypass zeros the traced table must show), and that no
+process it started (the JVM, its Python workers) is left when it exits.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ import os
 import subprocess
 import sys
 import tempfile
+import time
 
 import numpy as np
 import pandas as pd
@@ -138,6 +140,45 @@ def check_generators():
     assert any(not t.isascii() for _, _, t in a["records"]), "NFKD-foldable rows"
 
 
+def run_processes() -> set:
+    """Processes of a running benchmark run: the JVM names the run's work
+    directory on its command line, its Python workers in their environment
+    (``SPARK_LOCAL_DIRS``)."""
+    marker = os.path.join(ROOT, ".perfbench_work").encode()
+    out = set()
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        for part in ("cmdline", "environ"):
+            try:
+                with open(f"/proc/{pid}/{part}", "rb") as fh:
+                    if marker in fh.read():
+                        out.add(int(pid))
+                        break
+            except OSError:
+                pass
+    return out
+
+
+def run_watched(cmd) -> tuple:
+    """Run ``cmd`` from the checkout, noting its processes while it runs.
+    Returns the exit code, stdout, stderr and the noted processes still
+    present (zombies included) once it has exited."""
+    seen: set = set()
+    with tempfile.TemporaryFile("w+") as out, tempfile.TemporaryFile("w+") as err:
+        proc = subprocess.Popen(cmd, cwd=ROOT, stdout=out, stderr=err, text=True)
+        deadline = time.monotonic() + 900
+        while proc.poll() is None:
+            if time.monotonic() > deadline:
+                proc.kill()
+                proc.wait()
+                raise AssertionError(f"{cmd} took over 900 s")
+            seen |= run_processes()
+            time.sleep(0.2)
+        out.seek(0)
+        err.seek(0)
+        left = sorted(p for p in seen if os.path.exists(f"/proc/{p}"))
+        return proc.returncode, out.read(), err.read(), left
+
+
 def check_runs():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
@@ -152,9 +193,10 @@ def check_runs():
         for trace in (0, 1):
             cmd = [sys.executable, os.path.join(HERE, "run.py"), "--workload", wl,
                    "--seed", "7", "--seconds", "1", "--trace", str(trace), "--size", "tiny"]
-            proc = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True, timeout=900)
-            assert proc.returncode == 0, proc.stderr[-2000:]
-            res = json.loads(proc.stdout.strip().splitlines()[-1])
+            code, stdout, stderr, left = run_watched(cmd)
+            assert code == 0, stderr[-2000:]
+            assert not left, (wl, trace, f"processes {left} outlived the run")
+            res = json.loads(stdout.strip().splitlines()[-1])
             assert res["correct"] and res["failed"] == 0, (wl, trace, res)
             missing = set(names[trace]) - set(res["metrics"])
             assert not missing, (wl, trace, sorted(missing))
